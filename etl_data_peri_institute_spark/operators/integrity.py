@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..sources.grid import ROW_IDX
@@ -94,6 +94,61 @@ def required_not_null_split(df: DataFrame, required: list[str]) -> FkResult:
     for c in required:
         any_null = any_null | F.col(c).isNull()
     return FkResult(valid=df.filter(~any_null), missing=df.filter(any_null))
+
+
+REJECT = "_reject"
+
+
+@dataclass(frozen=True)
+class ForeignKey:
+    """Reject rule: the row's ``key`` is not among ``parent``'s keys."""
+
+    reason: str
+    parent: DataFrame
+    key: str
+
+
+@dataclass(frozen=True)
+class RequiredNotNull:
+    """Reject rule: one of ``columns`` is null."""
+
+    reason: str
+    columns: list[str]
+
+
+def label_rejects(child: DataFrame, *rules: ForeignKey | RequiredNotNull) -> DataFrame:
+    """J2/J3 + F4 as one labelling pass: add a ``_reject`` column holding
+    the reason of the first declared rule a row breaks (null when it
+    breaks none). One labelled frame then feeds the reject counts, each
+    audit and the insert, instead of a semi/anti pair plus a null split
+    that each re-run the child plan.
+
+    An FK rule left-joins the parent's distinct non-null keys tagged with
+    a marker column; a row left without the marker is missing — a null
+    child key never matches, as in ``fk_split``'s anti join. The parent
+    side is not force-broadcast (see ``fk_split``). Columns come out in
+    the order of a join on each FK key — the key first, as from
+    ``fk_split``'s semi join, so stored table layouts do not change —
+    then ``_reject``."""
+    out = child
+    tags: list[str] = []
+    broken: list[tuple[Column, str]] = []
+    for i, rule in enumerate(rules):
+        if isinstance(rule, ForeignKey):
+            tag = f"__fk_{i}"
+            tags.append(tag)
+            keys = rule.parent.select(rule.key).na.drop().distinct()
+            out = out.join(keys.withColumn(tag, F.lit(True)), rule.key, "left")
+            broken.append((F.col(tag).isNull(), rule.reason))
+        else:
+            any_null = F.lit(False)
+            for c in rule.columns:
+                any_null = any_null | F.col(c).isNull()
+            broken.append((any_null, rule.reason))
+    label = F.lit(None).cast("string")
+    for cond, reason in reversed(broken):
+        label = F.when(cond, reason).otherwise(label)
+    return out.withColumn(REJECT, label).drop(*tags)
 
 
 def assert_castable(df: DataFrame, raw_col: str, casted_col: str) -> None:

@@ -15,6 +15,11 @@ Faithful behaviors preserved (SURVEY.md §7.4):
 - shared matriculas extract feeds two transforms (O2) → ``.cache()``;
 - FK-missing and required-null rows audit to CSV then drop (or abort,
   per policy flags — O6).
+
+Each transactional plan runs once: ``label_rejects`` tags every row with
+its reject reason, the labelled frame is cached, one bounded
+``groupBy(_reject).count()`` gives the per-reason counts the abort
+policies and audits act on, and the insert takes the unlabelled rows.
 """
 
 from __future__ import annotations
@@ -26,12 +31,19 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.integrity import (
+    REJECT,
+    ForeignKey,
     IntegrityError,
+    RequiredNotNull,
     assert_pk_absent,
     dedupe_keep_last,
-    fk_split,
-    required_not_null_split,
+    label_rejects,
 )
+
+# The split operators the pipeline ran before it labelled rejects in one
+# pass stay importable here: perfbench/tracing.py wraps them by name on
+# this module.
+from .operators.integrity import fk_split, required_not_null_split  # noqa: F401
 from .sinks import ParquetStore, audit_csv
 from .sources.grid import PAGOS_CANONICAL, Grid, grid_to_df
 from .transforms import (
@@ -88,17 +100,17 @@ def run_pipeline(
     raw_mats = grid_to_df(spark, grids["matriculas"], header_row=3)
     todays_raw = _incremental_filter(raw_mats, "Marca temporal", target).cache()  # O2
 
-    matriculas = transform_matriculas(todays_raw)
-    students = store.read("estudiantes")
-    split = fk_split(matriculas, students, "codigo_estudiante")
-    missing_n = split.missing.count()
-    if missing_n:
-        if not drop_missing_students:
-            raise IntegrityError(f"{missing_n} matriculas reference unknown estudiantes")
-        path = audit_csv(split.missing, audit_dir, "matriculas_fk_missing")
-        if path:
-            result.audits.append(path)
-    matriculas = split.valid.cache()
+    abort = {} if drop_missing_students else {
+        "matriculas_fk_missing": "matriculas reference unknown estudiantes"
+    }
+    mats = _settle_rejects(
+        transform_matriculas(todays_raw),
+        [ForeignKey("matriculas_fk_missing", store.read("estudiantes"), "codigo_estudiante")],
+        abort,
+        audit_dir,
+        result,
+    )
+    matriculas = _valid(mats)
     # J1: abort if any incoming PK already exists in the target (reference
     # etl/load.py:59-85 — re-running the same day must not double-insert)
     if store.exists("matriculas"):
@@ -107,7 +119,7 @@ def run_pipeline(
 
     # valid matricula keys for the pagos semi-filters (F3)
     valid_keys = matriculas.select("codigo_matricula").distinct()
-    todays_mats_empty = matriculas.isEmpty()
+    todays_mats_empty = result.counts["matriculas"] == 0
 
     # -- pagos: primera cuota + regulares, consolidated ---------------------
     primera = transform_pagos_primera_cuota(todays_raw)
@@ -132,30 +144,58 @@ def run_pipeline(
         # empty (etl/pipeline.py:194) — quirk preserved
         regulares = regulares.join(F.broadcast(valid_keys), "codigo_matricula", "left_semi")
 
-    pagos = primera.unionByName(regulares)
-
-    # FK → matriculas (against the full stored table)
-    pg_split = fk_split(pagos, store.read("matriculas"), "codigo_matricula")
-    pg_missing_n = pg_split.missing.count()
-    if pg_missing_n:
-        if not drop_missing_matriculas:
-            raise IntegrityError(f"{pg_missing_n} pagos reference unknown matriculas")
-        path = audit_csv(pg_split.missing, audit_dir, "pagos_fk_missing")
-        if path:
-            result.audits.append(path)
-    pagos = pg_split.valid
-
-    # required-not-null (fecha_pago) with audit backup — F4
-    rq = required_not_null_split(pagos, PAGOS_REQUIRED)
-    if not rq.missing.isEmpty():
-        path = audit_csv(rq.missing, audit_dir, "pagos_required_null")
-        if path:
-            result.audits.append(path)
-    result.counts["pagos"] = store.insert(rq.valid, "pagos")
+    # FK → matriculas (against the full stored table), then required-not-
+    # null (fecha_pago) — F4; a row breaking both is audited as FK-missing
+    abort = {} if drop_missing_matriculas else {
+        "pagos_fk_missing": "pagos reference unknown matriculas"
+    }
+    pagos = _settle_rejects(
+        primera.unionByName(regulares),
+        [
+            ForeignKey("pagos_fk_missing", store.read("matriculas"), "codigo_matricula"),
+            RequiredNotNull("pagos_required_null", PAGOS_REQUIRED),
+        ],
+        abort,
+        audit_dir,
+        result,
+    )
+    result.counts["pagos"] = store.insert(_valid(pagos), "pagos")
 
     todays_raw.unpersist()
-    matriculas.unpersist()
+    mats.unpersist()
+    pagos.unpersist()
     return result
+
+
+def _settle_rejects(
+    df: DataFrame,
+    rules: list[ForeignKey | RequiredNotNull],
+    abort: dict[str, str],
+    audit_dir: str,
+    result: PipelineResult,
+) -> DataFrame:
+    """Label ``df``'s rejects, cache the labelled frame and count its rows
+    per reason in one bounded aggregate (at most one row per rule plus
+    the valid rows). Raise ``IntegrityError`` for a reason in ``abort``
+    (reason → message) that occurred, before anything is written;
+    otherwise audit each reason that occurred, in declared order. Returns
+    the cached labelled frame (the caller unpersists it)."""
+    labelled = label_rejects(df, *rules).cache()
+    counts = {r[REJECT]: r["count"] for r in labelled.groupBy(REJECT).count().collect()}
+    for reason, message in abort.items():
+        if counts.get(reason):
+            raise IntegrityError(f"{counts[reason]} {message}")
+    for rule in rules:
+        if counts.get(rule.reason):
+            rejected = labelled.filter(F.col(REJECT) == rule.reason).drop(REJECT)
+            path = audit_csv(rejected, audit_dir, rule.reason)
+            if path:
+                result.audits.append(path)
+    return labelled
+
+
+def _valid(labelled: DataFrame) -> DataFrame:
+    return labelled.filter(F.col(REJECT).isNull()).drop(REJECT)
 
 
 def observed_stage(

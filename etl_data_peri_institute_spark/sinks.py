@@ -16,8 +16,10 @@ The JDBC variant (the reference's actual Postgres target) is
 ``jdbc_upsert_sql`` MERGE statement for upsert.
 
 Execution discipline: each sink runs the incoming plan EXACTLY ONCE —
-the frame is staged to parquet first, and row counts come from the
-staged files' parquet footers (a metadata-only count, no recompute).
+the frame is staged to parquet first, and its row count comes from an
+``Observation`` on that one staging write (no job re-reads the staged
+files to count them). Re-reads of the stage pass the frame's own schema,
+so no schema-inference job runs either.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ import shutil
 import tempfile
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -80,11 +82,13 @@ class ParquetStore:
 
     def _stage(self, df: DataFrame, table: str) -> tuple[str, int]:
         """Materialize ``df`` once into a staging dir; return (dir, n).
-        The count reads parquet footers only — the plan is not re-run."""
+        ``n`` is observed on the staging write itself — no further job
+        runs to count the staged rows. An empty frame still stages one
+        schema-only part file; callers append nothing when ``n`` is 0."""
         stage = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_stage_")
-        df.write.mode("overwrite").parquet(stage)
-        n = self.spark.read.parquet(stage).count()
-        return stage, n
+        staged = Observation()
+        df.observe(staged, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(stage)
+        return stage, staged.get["n"]
 
     # ---- crash-consistency journal --------------------------------
     # Every multi-step directory mutation (whole-table swap, partition
@@ -424,8 +428,8 @@ class ParquetStore:
     ) -> int:
         """Append-only INSERT (reference insert mode, etl/load.py:285).
 
-        One plan execution: stage → footer count → append into the
-        table directory.
+        One plan execution: stage (row count observed on that write) →
+        append into the table directory.
 
         ``meta_files`` commit ATOMICALLY with the appended rows (written
         inside the same journaled mutation, rolled back together on a
@@ -471,7 +475,7 @@ class ParquetStore:
                 lay = tempfile.mkdtemp(dir=self.root, prefix=f".{table}_ins_")
                 try:
                     (
-                        self.spark.read.parquet(stage)
+                        self.spark.read.schema(df.schema).parquet(stage)
                         .write.mode("overwrite")
                         .partitionBy(*partition_by)
                         .parquet(lay)
@@ -877,7 +881,7 @@ class ParquetStore:
         try:
             if not n:
                 return 0
-            incoming = self.spark.read.parquet(stage)
+            incoming = self.spark.read.schema(df.schema).parquet(stage)
             part_cols = self._detect_partition_cols(table)
             has_table = os.path.isdir(self.path(table))
             if (
@@ -1093,22 +1097,26 @@ def audit_csv(df: DataFrame, out_dir: str, reason: str) -> str | None:
     (the reference, and an earlier version here, materialized rows on
     one node). Output is a directory of header-carrying CSV parts, the
     standard distributed-artifact layout. Returns the directory path,
-    or None if there was nothing to audit (checked with ``isEmpty`` —
-    a first-row probe, not a full pass).
+    or None if there was nothing to audit.
+
+    One upstream execution: the rows are counted by an ``Observation`` on
+    the write itself, and a write that landed 0 rows (its one schema-only
+    part file) is removed again — no probe job runs before the write.
     """
-    # one upstream execution: the lazy checkpoint materializes on the
-    # isEmpty probe and the write re-reads the checkpoint (an expensive
-    # rejects plan would otherwise run twice, and a nondeterministic one
-    # could disagree between probe and write)
-    df = df.localCheckpoint(eager=False)
-    if df.isEmpty():
-        return None
-    os.makedirs(out_dir, exist_ok=True)
     # microseconds in the stamp: two same-reason audits within one
     # second must not overwrite each other's rejected rows
     stamp = datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S_%f")
     path = os.path.join(out_dir, f"{reason}_{stamp}.csv")
-    df.write.option("header", True).mode("overwrite").csv(path)
+    written = Observation()
+    (
+        df.observe(written, F.count(F.lit(1)).alias("n"))
+        .write.option("header", True)
+        .mode("overwrite")
+        .csv(path)
+    )
+    if not written.get["n"]:
+        shutil.rmtree(path, ignore_errors=True)
+        return None
     return path
 
 

@@ -7,12 +7,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_data_peri_institute_spark.operators.integrity import (
+    REJECT,
+    ForeignKey,
     IntegrityError,
+    RequiredNotNull,
     assert_castable,
     assert_pk_absent,
     dedupe_keep_last,
     duplicate_keys,
     fk_split,
+    label_rejects,
     required_not_null_split,
 )
 
@@ -59,6 +63,30 @@ def test_required_not_null_split(spark, child):
     res = required_not_null_split(child, ["fk"])
     assert {r["id"] for r in res.valid.collect()} == {"A", "B", "C"}
     assert {r["id"] for r in res.missing.collect()} == {"D"}
+
+
+def test_label_rejects_first_declared_reason_wins(spark):
+    """One label per row, agreeing with fk_split and
+    required_not_null_split: a null FK key is FK-missing, a row breaking
+    both rules carries the first declared reason, and a duplicated parent
+    key does not duplicate child rows."""
+    child = spark.createDataFrame(
+        [("A", "k1", "x"), ("B", "k1", None), ("C", "k2", "x"), ("D", None, None)],
+        "id string, fk string, req string",
+    )
+    parent = spark.createDataFrame([("k1",), ("k1",), (None,)], "fk string")
+    fk = ForeignKey("fk_missing", parent, "fk")
+    req = RequiredNotNull("req_null", ["req"])
+
+    def labels(df):
+        return {r["id"]: r[REJECT] for r in df.collect()}
+
+    fk_first = label_rejects(child, fk, req)
+    assert fk_first.columns == ["fk", "id", "req", REJECT]
+    assert labels(fk_first) == {"A": None, "B": "req_null", "C": "fk_missing", "D": "fk_missing"}
+    assert labels(label_rejects(child, req, fk)) == {
+        "A": None, "B": "req_null", "C": "fk_missing", "D": "req_null",
+    }
 
 
 def test_assert_castable(spark):

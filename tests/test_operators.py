@@ -381,8 +381,23 @@ def test_audit_csv_roundtrip(spark, tmp_path):
     assert sorted(data_rows) == ['"x",""', "y,2"] or sorted(data_rows) == ["x,", "y,2"]
     # Spark round-trip sees exactly the audited rows
     assert spark.read.option("header", True).csv(path).count() == 2
-    # empty frame → no artifact
+    # empty frame → no artifact: the one schema-only write is removed again
     assert audit_csv(df.filter(F.col("a") == "zz"), str(tmp_path / "audit"), "r2") is None
+    assert os.listdir(tmp_path / "audit") == [os.path.basename(path)]
+
+
+def test_store_empty_writes_create_no_table(spark, tmp_path):
+    """An empty frame stages one schema-only part file; insert and upsert
+    must count 0 from the write and append nothing — no table directory
+    appears, so exists() stays False."""
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    empty = spark.createDataFrame([], "k long, v string")
+    assert store.insert(empty, "t_ins") == 0
+    assert store.insert(empty, "t_part", partition_by=["v"]) == 0
+    assert store.upsert(empty, "t_up", "k") == 0
+    for table in ("t_ins", "t_part", "t_up"):
+        assert not store.exists(table)
+    assert os.listdir(store.root) == []
 
 
 def test_jdbc_sink_wrapper(spark, monkeypatch):

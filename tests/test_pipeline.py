@@ -222,3 +222,94 @@ def test_packaged_grid_csvs_match_fixtures():
         with open(grid_dir / f"{name}.csv", newline="") as fh:
             on_disk = [list(row) for row in csv.reader(fh)]
         assert on_disk == grid, name
+
+
+def test_pipeline_abort_on_missing_students(spark, tmp_path):
+    """O6 abort policy: with ``drop_missing_students=False`` an FK-missing
+    matricula (M005 → E999) aborts the day before anything of matriculas
+    is written — no audit directory, no matriculas rows."""
+    import os
+
+    import pytest
+
+    from etl_data_peri_institute_spark.operators.integrity import IntegrityError
+
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    audit_dir = str(tmp_path / "audit")
+    with pytest.raises(IntegrityError, match="unknown estudiantes"):
+        run_pipeline(
+            spark, ALL_GRIDS, store, target_date=TARGET_DATE,
+            audit_dir=audit_dir, drop_missing_students=False,
+        )
+    assert not os.path.exists(audit_dir)
+    assert not store.exists("matriculas")
+    assert not store.exists("pagos")
+
+
+def test_pipeline_abort_on_missing_matriculas(spark, tmp_path):
+    """O6 abort policy for pagos: on a day with no matriculas the regular
+    pagos skip the semi-filter, so an FK-missing payment (M999) reaches
+    the FK check; ``drop_missing_matriculas=False`` then aborts before
+    any pagos audit or row is written — the required-null payment of the
+    same day (M002, empty fecha_pago) is not audited either."""
+    import os
+
+    import pytest
+
+    from etl_data_peri_institute_spark.operators.integrity import IntegrityError
+
+    store = ParquetStore(spark, str(tmp_path / "db"))
+    run_pipeline(spark, ALL_GRIDS, store, target_date=TARGET_DATE)
+    pagos_before = sorted(store.read("pagos").collect())
+
+    grids = dict(ALL_GRIDS)
+    grids["pagos"] = ALL_GRIDS["pagos"] + [
+        ["12/03/2024 10:00:00", "M999", "99", "YAPE", "Luis", "12/03/2024"],
+        ["12/03/2024 11:00:00", "M002", "80", "BCP", "Luis", ""],
+    ]
+    audit_dir = str(tmp_path / "audit2")
+    with pytest.raises(IntegrityError, match="unknown matriculas"):
+        run_pipeline(
+            spark, grids, store, target_date="2024-03-12",
+            audit_dir=audit_dir, drop_missing_matriculas=False,
+        )
+    assert not os.path.exists(audit_dir)
+    assert sorted(store.read("pagos").collect()) == pagos_before
+    assert store.read("matriculas").count() == 2
+
+
+def test_pipeline_day_runs_each_plan_once(spark, tmp_path, monkeypatch):
+    """Single-pass pin: a default-policy day over the packaged grid CSVs
+    never calls the classic ``count``/``isEmpty``/``localCheckpoint`` —
+    reject counts come from one bounded aggregate per table and sink row
+    counts from an Observation on the write itself. Two days cover both
+    the create and the merge/append paths, the PK guard, and the
+    empty-matriculas day."""
+    import os
+    from pathlib import Path
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    import etl_data_peri_institute_spark as pkg
+    from etl_data_peri_institute_spark.pipeline import _read_grid_csv
+
+    grid_dir = Path(pkg.__file__).parent / "data" / "grids"
+    grids = {n: _read_grid_csv(str(grid_dir / f"{n}.csv")) for n in ALL_GRIDS}
+    store = ParquetStore(spark, str(tmp_path / "db"))
+
+    def forbidden(self, *args, **kwargs):
+        raise AssertionError("a second pass over a pipeline plan")
+
+    for name in ("count", "isEmpty", "localCheckpoint"):
+        monkeypatch.setattr(DataFrame, name, forbidden)
+    day1 = run_pipeline(spark, grids, store, target_date=TARGET_DATE)
+    day2 = run_pipeline(spark, grids, store, target_date="2024-03-12")
+    monkeypatch.undo()
+
+    assert day1.counts == {"cursos": 3, "estudiantes": 5, "matriculas": 2, "pagos": 4}
+    assert sorted(os.path.basename(p).rsplit("_", 3)[0] for p in day1.audits) == [
+        "matriculas_fk_missing", "pagos_required_null",
+    ]
+    assert day2.counts == {"cursos": 3, "estudiantes": 5, "matriculas": 0, "pagos": 1}
+    assert day2.audits == []
+    assert store.read("pagos").count() == 5
